@@ -25,16 +25,14 @@ golden and scripts/validate_at_scale.py):
 
 Physical plan (Spark-first, zero probe-side shuffle):
 1. one Arrow-batched pandas UDF parses + projects each footprint ONCE
-   and emits its geometry (nested part arrays for the default
-   expression refine; WKB for the numpy refine) + bbox, so downstream
-   stages never re-parse;
+   and emits its geometry (nested part arrays; WKB for the partitioned
+   twin's numpy refine) + bbox, so downstream stages never re-parse;
 2. the probe's bbox cell cover is exploded JVM-side with
    sequence()/explode (pure codegen — footprints are small, the cover
    is a handful of cells at the prefilter grid);
 3. broadcast hash join against the layer's (cell, poly_id) cover;
-4. the exact intersects refine: by default nested JVM higher-order
-   lambdas over the part/edge arrays (no Python after stage 1);
-   optionally the WKB + numpy pandas UDF. Duplicate (footprint,
+4. the exact intersects refine: nested JVM higher-order lambdas over
+   the part/edge arrays (no Python after stage 1). Duplicate (footprint,
    polygon) candidates from multi-cell overlap are deduped WITHOUT a
    shuffle: a candidate is emitted only from its reporting cell — the
    cell containing the lower-left corner of the bbox intersection,
@@ -416,132 +414,31 @@ def footprint_join(
     fp_col: str = "footprint",
     lon_col: str = "lon",
     lat_col: str = "lat",
-    refine: str = "expr",
 ) -> DataFrame:
     """(key_col, poly_id) rows where the row's footprint geometry
     intersects the layer polygon. `pages` carries the raw footprint WKT
     plus lon/lat doubles (fgcspark.extract.with_extracted output).
 
-    refine="expr" (default) runs the exact intersects predicate as
-    nested JVM higher-order lambdas over the footprint's part arrays
-    and the polygon's broadcast edge/vertex arrays — after the single
-    parse/project UDF, no Python touches the hot path. refine="pandas"
-    keeps the WKB + numpy backend (wins for very vertex-heavy
-    geometries, same tradeoff as pip_join). Both evaluate identical
-    float predicates in identical operation order — bit-identical
-    outputs (asserted by test_joins.py)."""
-    if refine == "expr":
-        return _footprint_join_expr(
-            spark, pages, polygons, cell_km, key_col, fp_col, lon_col, lat_col
-        )
-    if refine != "pandas":
-        raise ValueError(f"unknown refine backend {refine!r}")
+    intersects = any footprint vertex inside the polygon (even-odd
+    parity), OR any (footprint segment x polygon edge) pair
+    crossing/touching, OR — for areal parts — any polygon vertex inside
+    the part, as nested JVM higher-order lambdas over the footprint's
+    part arrays and the polygon's broadcast edge/vertex arrays. One
+    broadcast-hash join; zero Python after the single parse/project
+    UDF, zero shuffle, reporting-cell dedup as plain column arithmetic.
+    The lambdas evaluate the same float predicates in the same
+    operation order as footprint_join_partitioned's numpy refine, so
+    the two joins return identical rows (asserted by test_joins.py)."""
     idx = build_polygon_index(spark, polygons, cell_km)
-    bc = spark.sparkContext.broadcast(
-        {int(p): (r, tuple(map(float, b))) for p, r, b in zip(idx.poly_ids, idx.rings, idx.bboxes)}
-    )
-    cover = spark.createDataFrame(
-        idx.cover(), schema="cell_n long, cell_e long, poly_id long"
-    )
     s = cell_km * 1000
-
-    probe = (
-        pages.select(
-            key_col,
-            _fp_project_wkb(F.col(fp_col), F.col(lon_col), F.col(lat_col)).alias("_g"),
-        )
-        .select(key_col, "_g.*")
-        .where(F.col("wkb").isNotNull())
-        .withColumn(
-            "cell_n",
-            F.explode(F.sequence(F.floor(F.col("y0") / s), F.floor(F.col("y1") / s))),
-        )
-        .withColumn(
-            "cell_e",
-            F.explode(F.sequence(F.floor(F.col("x0") / s), F.floor(F.col("x1") / s))),
-        )
-        .join(F.broadcast(cover), ["cell_n", "cell_e"])
-    )
-
-    @pandas_udf(T.BooleanType())
-    def refine(
-        wkb: pd.Series,
-        x0: pd.Series,
-        y0: pd.Series,
-        pid: pd.Series,
-        cell_n: pd.Series,
-        cell_e: pd.Series,
-    ) -> pd.Series:
-        table = bc.value
-        fx0 = x0.to_numpy()
-        fy0 = y0.to_numpy()
-        pv = pid.to_numpy()
-        cn = cell_n.to_numpy()
-        ce = cell_e.to_numpy()
-        out = np.zeros(len(pv), dtype=bool)
-        cache: dict[int, list] = {}
-        for i in range(len(pv)):
-            rings, (px0, py0, _, _) = table[int(pv[i])]
-            # reporting-cell dedup: only the cell holding the bbox
-            # intersection's lower-left corner emits this pair
-            if int(np.floor(max(fy0[i], py0) / s)) != cn[i]:
-                continue
-            if int(np.floor(max(fx0[i], px0) / s)) != ce[i]:
-                continue
-            key = wkb.iloc[i]
-            parts = cache.get(key)
-            if parts is None:
-                parts = []
-                _flatten_parts(from_wkb(key), parts)
-                cache[key] = parts
-            out[i] = geom_intersects_rings(parts, rings)
-        return pd.Series(out)
-
-    return probe.filter(
-        refine(
-            F.col("wkb"),
-            F.col("x0"),
-            F.col("y0"),
-            F.col("poly_id"),
-            F.col("cell_n"),
-            F.col("cell_e"),
-        )
-    ).select(key_col, "poly_id")
-
-
-def _footprint_join_expr(
-    spark: SparkSession,
-    pages: DataFrame,
-    polygons: DataFrame,
-    cell_km: int,
-    key_col: str,
-    fp_col: str,
-    lon_col: str,
-    lat_col: str,
-) -> DataFrame:
-    """JVM-expression backend of footprint_join: intersects =
-    any footprint vertex inside the polygon (even-odd parity), OR any
-    (footprint segment x polygon edge) pair crossing/touching, OR —
-    for areal parts — any polygon vertex inside the part. One
-    broadcast-hash join + interpreted lambdas; zero Python after the
-    parse/project UDF, zero shuffle, reporting-cell dedup as plain
-    column arithmetic."""
-    idx = build_polygon_index(spark, polygons, cell_km)
-    cover_rows = []
-    s = cell_km * 1000
-    for i, (pid, (x0, y0, x1, y1)) in enumerate(zip(idx.poly_ids, idx.bboxes)):
-        edges = [tuple(map(float, e)) for e in idx.edges_flat(i)]
-        verts = [
-            (float(x), float(y))
-            for ring in idx.rings[i]
-            for x, y in np.asarray(ring, float)
-        ]
-        for nb in range(int(np.floor(y0 / s)), int(np.floor(y1 / s)) + 1):
-            for eb in range(int(np.floor(x0 / s)), int(np.floor(x1 / s)) + 1):
-                cover_rows.append(
-                    (nb, eb, int(pid), edges, verts,
-                     float(x0), float(y0), float(x1), float(y1))
-                )
+    verts = {
+        int(pid): [(float(x), float(y)) for ring in idx.rings[i] for x, y in ring]
+        for i, pid in enumerate(idx.poly_ids)
+    }
+    cover_rows = [
+        (nb, eb, pid, edges, verts[pid], *bbox)
+        for nb, eb, pid, edges, *bbox in idx.cover_with_edges()
+    ]
     cover = spark.createDataFrame(
         cover_rows,
         schema=(
@@ -568,7 +465,7 @@ def _footprint_join_expr(
             F.explode(F.sequence(F.floor(F.col("x0") / s), F.floor(F.col("x1") / s))),
         )
         .join(F.broadcast(cover), ["cell_n", "cell_e"])
-        # reporting-cell dedup (same arithmetic as the pandas refine):
+        # reporting-cell dedup (same arithmetic as the partitioned refine):
         # only the cell holding the bbox-intersection's lower-left
         # corner emits a (footprint, polygon) pair
         .where(

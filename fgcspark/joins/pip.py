@@ -6,17 +6,20 @@ R/finbif_geo_convert.R:83); this operator is the graft requirement
 EPSG:3067) against a small polygon layer.
 
 Physical strategy (SURVEY.md §4 rewrite #1):
-1. driver-side: parse + project the polygon layer once, build the cell
-   cover of each polygon's bbox at a prefilter grid size, and an
-   STR-style sorted bbox array for the in-batch refine;
+1. driver-side: parse + project the polygon layer once and build the
+   cell cover of each polygon's bbox at a prefilter grid size, each
+   cover row carrying the polygon's flat edge array and bbox;
 2. candidates = pages equi-joined (broadcast hash join, zero shuffle)
-   to the (cell_key, poly_id) cover table on the page's cell key;
-3. exact crossing-number refine in one Arrow-batched pandas UDF,
-   vectorized per polygon over its candidate points.
+   to that (cell_key, poly_id) cover table on the page's cell key;
+3. exact crossing-number refine as a JVM higher-order lambda over the
+   candidate's edge array — no Python workers in the join.
 
 At 100 TB the probe side streams through the scan once: no shuffle, no
 sort, no skew sensitivity (broadcast joins replicate the build side, so
-hot cells cost only the refine, which is O(candidates) vectorized).
+hot cells cost only the refine, which is O(candidates x edges)).
+
+pip_join_partitioned is the distributed twin: the same crossing formula
+in numpy (_pip_mask) over a cogrouped, executor-built cover.
 """
 
 from __future__ import annotations
@@ -26,7 +29,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from fgcspark.crs import tm35fin as tm
 from fgcspark.geom.wkt import parse_wkt
@@ -35,9 +37,8 @@ DEFAULT_CELL_KM = 50
 
 
 class PolygonIndex:
-    """Driver-built broadcastable polygon index: projected rings +
-    bboxes sorted by xmin (STR-flavored: binary-searchable envelope
-    array) + cell cover table.
+    """Driver-built polygon index: projected rings + bboxes + the cell
+    cover table that pip_join broadcasts.
 
     `rings[i]` is the LIST of rings of polygon i — exterior ring(s)
     plus interior holes; MULTIPOLYGON parts contribute their rings to
@@ -60,16 +61,6 @@ class PolygonIndex:
             ]
         )
 
-    def cover(self) -> list[tuple[int, int, int]]:
-        """(cell_n, cell_e, poly_id) rows covering each polygon bbox."""
-        s = self.cell_km * 1000
-        out = []
-        for pid, (x0, y0, x1, y1) in zip(self.poly_ids, self.bboxes):
-            for nb in range(int(np.floor(y0 / s)), int(np.floor(y1 / s)) + 1):
-                for eb in range(int(np.floor(x0 / s)), int(np.floor(x1 / s)) + 1):
-                    out.append((nb, eb, int(pid)))
-        return out
-
     def edges_flat(self, i: int) -> list[tuple[float, float, float, float]]:
         """All edges of polygon index i as (x0, y0, x1, y1) tuples —
         every ring contributes its consecutive vertex pairs (closed
@@ -86,8 +77,10 @@ class PolygonIndex:
         return out
 
     def cover_with_edges(self):
-        """cover() rows extended with the polygon's flat edge array and
-        bbox — the broadcast build side of the JVM-expression refine."""
+        """(cell_n, cell_e, poly_id, edges, x0, y0, x1, y1) rows: one
+        per prefilter cell covering each polygon bbox, with the
+        polygon's flat edge array and bbox — pip_join's broadcast
+        build side."""
         s = self.cell_km * 1000
         out = []
         for i, (pid, (x0, y0, x1, y1)) in enumerate(zip(self.poly_ids, self.bboxes)):
@@ -163,13 +156,13 @@ def _plan_fingerprint(df: DataFrame) -> str:
 def cached_index(
     spark: SparkSession, polygons: DataFrame, cell_km: int, cache_key: str
 ):
-    """Build the polygon index + its broadcast once per (key, cell_km)
-    and reuse across jobs — the build side of this join is immutable
+    """Build the polygon index once per (key, cell_km) and reuse it
+    across jobs — the build side of this join is immutable
     for the lifetime of a scan, so one driver-side build amortizes over
     the entire (100 TB) probe table.
 
     Keyed by SparkContext applicationId + the polygon plan fingerprint
-    so a cached Broadcast never outlives its owning context and never
+    so a cached index never outlives its owning context and never
     serves a different polygon layer; entries from stopped contexts
     are evicted on the next miss."""
     sc = spark.sparkContext
@@ -178,17 +171,13 @@ def cached_index(
     if k not in _INDEX_CACHE:
         for old in [key for key in _INDEX_CACHE if key[0] != app_id]:
             del _INDEX_CACHE[old]
-        idx = build_polygon_index(spark, polygons, cell_km)
-        bc = sc.broadcast(
-            {int(p): (r, b) for p, r, b in zip(idx.poly_ids, idx.rings, idx.bboxes)}
-        )
-        _INDEX_CACHE[k] = (idx, bc)
+        _INDEX_CACHE[k] = build_polygon_index(spark, polygons, cell_km)
     return _INDEX_CACHE[k]
 
 
 def _expr_cover(spark: SparkSession, idx) -> DataFrame:
-    """The broadcast build side of the expr backend: one row per
-    (covering cell, polygon) carrying the polygon's edge array + bbox."""
+    """The broadcast build side of pip_join: one row per (covering
+    cell, polygon) carrying the polygon's edge array + bbox."""
     return spark.createDataFrame(
         idx.cover_with_edges(),
         schema=(
@@ -202,7 +191,7 @@ def _expr_cover(spark: SparkSession, idx) -> DataFrame:
 def _edge_crossings():
     """Ray-crossing count of the current row's (e, n) point against the
     row's `edges` array, as a JVM higher-order aggregate lambda — same
-    IEEE-double operation order as the numpy kernel (bit-identical)."""
+    IEEE-double operation order as the numpy _pip_mask (bit-identical)."""
     return F.aggregate(
         "edges",
         F.lit(0),
@@ -219,6 +208,18 @@ def _edge_crossings():
     )
 
 
+def _point_cells(points: DataFrame, key_col: str, cell_km: int) -> DataFrame:
+    """(key_col, e, n, cell_n, cell_e): each point's prefilter cell."""
+    s = cell_km * 1000
+    return points.select(
+        key_col,
+        "e",
+        "n",
+        F.floor(F.col("n") / s).cast("long").alias("cell_n"),
+        F.floor(F.col("e") / s).cast("long").alias("cell_e"),
+    )
+
+
 def pip_join(
     spark: SparkSession,
     points: DataFrame,
@@ -226,88 +227,34 @@ def pip_join(
     cell_km: int = DEFAULT_CELL_KM,
     key_col: str = "url",
     cache_key: str | None = None,
-    refine: str = "expr",
 ) -> DataFrame:
     """Exact PIP join: returns (key_col, poly_id) rows.
 
-    `points` must carry EPSG:3067 `e`/`n` columns (pipeline.with_tm35).
-    Pass cache_key to reuse the driver-built index across jobs.
+    `points` must carry EPSG:3067 `e`/`n` columns
+    (pipeline.pages_to_points). Pass cache_key to reuse the driver-built
+    index across jobs.
 
-    Two refine backends, identical IEEE-double arithmetic (the crossing
-    formula `(x1-x0)*(py-y0)/(y1-y0)+x0` is evaluated in the same
-    operation order, so results are bit-identical — asserted by
-    test_joins.py):
-
-    - "expr" (default): crossing parity as a JVM higher-order
-      `aggregate` lambda over the polygon's broadcast edge array —
-      NO Python workers anywhere in the join, no Arrow IPC, no extra
-      process scheduling; the whole join is one broadcast-hash join
-      plus interpreted-expression filters. Cost is O(edges) per
-      candidate row in the JVM.
-    - "pandas": the Arrow-batched numpy kernel (vectorized per polygon
-      over its candidate batch). Wins when polygons are edge-heavy
-      (thousands of vertices), where the O(edges) interpreted lambda
-      loses to vectorized (candidates x edges) numpy blocks.
-    """
-    if refine not in ("expr", "pandas"):
-        raise ValueError(f"unknown refine backend {refine!r}")
+    The refine is the crossing parity as a JVM higher-order `aggregate`
+    lambda over the polygon's broadcast edge array: NO Python workers
+    anywhere in the join, no Arrow IPC, no extra process scheduling —
+    one broadcast-hash join plus interpreted-expression filters, at
+    O(edges) per candidate row. The crossing formula
+    `(x1-x0)*(py-y0)/(y1-y0)+x0` is evaluated in the same operation
+    order as pip_join_partitioned's numpy kernel, so the two joins
+    return identical rows (asserted by test_joins.py)."""
     if cache_key is not None:
-        idx, bc = cached_index(spark, polygons, cell_km, cache_key)
+        idx = cached_index(spark, polygons, cell_km, cache_key)
     else:
         idx = build_polygon_index(spark, polygons, cell_km)
-        bc = spark.sparkContext.broadcast(
-            {int(p): (r, b) for p, r, b in zip(idx.poly_ids, idx.rings, idx.bboxes)}
+    cand = (
+        _point_cells(points, key_col, cell_km)
+        .join(F.broadcast(_expr_cover(spark, idx)), ["cell_n", "cell_e"])
+        .where(
+            (F.col("e") >= F.col("bx0")) & (F.col("e") <= F.col("bx1"))
+            & (F.col("n") >= F.col("by0")) & (F.col("n") <= F.col("by1"))
         )
-    s = cell_km * 1000
-    cell_cols = [
-        F.floor(F.col("n") / s).cast("long").alias("cell_n"),
-        F.floor(F.col("e") / s).cast("long").alias("cell_e"),
-    ]
-
-    if refine == "expr":
-        cover = _expr_cover(spark, idx)
-        cand = (
-            points.select(key_col, "e", "n", *cell_cols)
-            .join(F.broadcast(cover), ["cell_n", "cell_e"])
-            .where(
-                (F.col("e") >= F.col("bx0")) & (F.col("e") <= F.col("bx1"))
-                & (F.col("n") >= F.col("by0")) & (F.col("n") <= F.col("by1"))
-            )
-        )
-        return cand.where(_edge_crossings() % 2 == 1).select(key_col, "poly_id")
-
-    cover = spark.createDataFrame(
-        idx.cover(), schema="cell_n long, cell_e long, poly_id long"
     )
-    cand = points.select(key_col, "e", "n", *cell_cols).join(
-        F.broadcast(cover), ["cell_n", "cell_e"]
-    )
-
-    @pandas_udf(T.BooleanType())
-    def refine_udf(e: pd.Series, n: pd.Series, pid: pd.Series) -> pd.Series:
-        ex = e.to_numpy()
-        ny = n.to_numpy()
-        pv = pid.to_numpy()
-        out = np.zeros(len(ex), dtype=bool)
-        table = bc.value
-        for p in np.unique(pv):
-            sel = np.nonzero(pv == p)[0]
-            rings, (x0, y0, x1, y1) = table[int(p)]
-            px, py = ex[sel], ny[sel]
-            inbb = (px >= x0) & (px <= x1) & (py >= y0) & (py <= y1)
-            m = np.zeros(len(sel), dtype=bool)
-            if inbb.any():
-                ins = np.zeros(int(inbb.sum()), dtype=bool)
-                for ring in rings:  # even-odd across exteriors + holes
-                    ins ^= _pip_mask(px[inbb], py[inbb], ring)
-                m[inbb] = ins
-            out[sel] = m
-        return pd.Series(out)
-
-    return (
-        cand.filter(refine_udf(F.col("e"), F.col("n"), F.col("poly_id")))
-        .select(key_col, "poly_id")
-    )
+    return cand.where(_edge_crossings() % 2 == 1).select(key_col, "poly_id")
 
 
 def pip_anti_join(
@@ -322,8 +269,8 @@ def pip_anti_join(
     geotag-QA step that drops pages whose parsed coordinate lands
     outside every admin boundary).
 
-    Shape: the same broadcast (cell -> edge array) cover as pip_join's
-    expr backend, but joined LEFT OUTER so zero-candidate points
+    Shape: the same broadcast (cell -> edge array) cover as pip_join,
+    but joined LEFT OUTER so zero-candidate points
     survive with a null build side, then ONE hash aggregate per point
     key (max of the per-candidate inside flag, map-side combined).
     The point table is shuffled exactly once (the groupBy on its own
@@ -331,14 +278,7 @@ def pip_anti_join(
     no second scan of the points. All refine arithmetic is the same
     JVM higher-order lambda as pip_join — no Python workers."""
     idx = build_polygon_index(spark, polygons, cell_km)
-    s = cell_km * 1000
-    pts = points.select(
-        key_col,
-        "e",
-        "n",
-        F.floor(F.col("n") / s).cast("long").alias("cell_n"),
-        F.floor(F.col("e") / s).cast("long").alias("cell_e"),
-    )
+    pts = _point_cells(points, key_col, cell_km)
     cand = pts.join(F.broadcast(_expr_cover(spark, idx)), ["cell_n", "cell_e"], "left")
     inside = F.when(
         F.col("poly_id").isNotNull()
@@ -478,15 +418,8 @@ def pip_join_partitioned(
     matter how skewed the point layer is. The factor table is an
     aggregate-only driver collect (cells above threshold only),
     broadcast back — point rows never leave the executors."""
-    s = cell_km * 1000
     cover = polygon_cover_table(polygons, cell_km)
-    pts = points.select(
-        key_col,
-        "e",
-        "n",
-        F.floor(F.col("n") / s).cast("long").alias("cell_n"),
-        F.floor(F.col("e") / s).cast("long").alias("cell_e"),
-    )
+    pts = _point_cells(points, key_col, cell_km)
 
     group_cols = ["cell_n", "cell_e"]
     factors = hot_cell_factors(spark, pts, max_cell_points)

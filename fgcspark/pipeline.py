@@ -54,9 +54,6 @@ def fmt7(x: float) -> str:
 _LONLAT = T.StructType(
     [T.StructField("lon", T.DoubleType()), T.StructField("lat", T.DoubleType())]
 )
-_EN = T.StructType(
-    [T.StructField("e", T.DoubleType()), T.StructField("n", T.DoubleType())]
-)
 
 
 @pandas_udf(_LONLAT)
@@ -75,19 +72,6 @@ def _centroid_lonlat(wkt: pd.Series) -> pd.DataFrame:
             c = None
         if c is not None:
             lon[i], lat[i] = c
-    return pd.DataFrame({"lon": lon, "lat": lat})
-
-
-@pandas_udf(_EN)
-def _lonlat_to_tm35(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-    """G10 forward transform 4326 -> 3067, whole-batch numpy."""
-    e, n = tm.geodetic_to_tm35(lon.to_numpy(), lat.to_numpy())
-    return pd.DataFrame({"e": e, "n": n})
-
-
-@pandas_udf(_LONLAT)
-def _tm35_to_lonlat(e: pd.Series, n: pd.Series) -> pd.DataFrame:
-    lon, lat = tm.tm35_to_geodetic(e.to_numpy(), n.to_numpy())
     return pd.DataFrame({"lon": lon, "lat": lat})
 
 
@@ -136,8 +120,6 @@ def _point_en(lon: pd.Series, lat: pd.Series, fp: pd.Series) -> pd.DataFrame:
 # at sf0.1. The trade (no filter pushdown through the UDF stage) is
 # cheap: every plan filters AFTER geometry materialization anyway.
 centroid_lonlat = _centroid_lonlat.asNondeterministic()
-lonlat_to_tm35 = _lonlat_to_tm35.asNondeterministic()
-tm35_to_lonlat = _tm35_to_lonlat.asNondeterministic()
 point_en = _point_en.asNondeterministic()
 
 
@@ -212,7 +194,9 @@ def with_point(df: DataFrame) -> DataFrame:
     """G2/G3: point lon/lat per row — coords when present, else footprint
     centroid (reference R/finbif_geo_convert.R:129-238). The centroid
     UDF receives NULL for rows that already have coords, so the Python
-    stage does no WKT work for the ~97 % fast path."""
+    stage does no WKT work for the ~97 % fast path. This is the wgs84
+    point path: it needs no projection, so it ships and returns two
+    doubles fewer per row than with_point_en."""
     need_centroid = F.col("lon").isNull() | F.col("lat").isNull()
     cen = centroid_lonlat(F.when(need_centroid, F.col("footprint")))
     return (
@@ -223,13 +207,20 @@ def with_point(df: DataFrame) -> DataFrame:
     )
 
 
-def with_tm35(df: DataFrame, lon_col: str = "plon", lat_col: str = "plat") -> DataFrame:
-    en = lonlat_to_tm35(F.col(lon_col), F.col(lat_col))
+def with_point_en(df: DataFrame) -> DataFrame:
+    """G2/G3 + G10 in one fused UDF: + `plon`/`plat` (coords, else
+    footprint centroid) and their EPSG:3067 `e`/`n`."""
+    # null the footprint for rows with coords: ~97 % of the Arrow batch
+    # bytes shipped to Python are footprint WKT the kernel won't read
+    need_fp = F.col("lon").isNull() | F.col("lat").isNull()
+    p = point_en(F.col("lon"), F.col("lat"), F.when(need_fp, F.col("footprint")))
     return (
-        df.withColumn("_en", en)
-        .withColumn("e", F.col("_en.e"))
-        .withColumn("n", F.col("_en.n"))
-        .drop("_en")
+        df.withColumn("_p", p)
+        .withColumn("plon", F.col("_p.plon"))
+        .withColumn("plat", F.col("_p.plat"))
+        .withColumn("e", F.col("_p.e"))
+        .withColumn("n", F.col("_p.n"))
+        .drop("_p")
     )
 
 
@@ -242,59 +233,7 @@ def with_tiles(df: DataFrame, sizes=grid.SIZES_KM) -> DataFrame:
 def pages_to_points(spark, data_dir: str) -> DataFrame:
     """scan -> extract -> point+project (one fused UDF) -> tiles. The
     engine's workhorse prefix: every spatial query builds on this plan."""
-    df = with_extracted(load_pages(spark, data_dir))
-    # null the footprint for rows with coords: ~97 % of the Arrow batch
-    # bytes shipped to Python are footprint WKT the kernel won't read
-    need_fp = F.col("lon").isNull() | F.col("lat").isNull()
-    p = point_en(F.col("lon"), F.col("lat"), F.when(need_fp, F.col("footprint")))
-    df = (
-        df.withColumn("_p", p)
-        .withColumn("plon", F.col("_p.plon"))
-        .withColumn("plat", F.col("_p.plat"))
-        .withColumn("e", F.col("_p.e"))
-        .withColumn("n", F.col("_p.n"))
-        .drop("_p")
-    )
-    return with_tiles(df)
-
-
-def pages_to_points_jvm(spark, data_dir: str) -> DataFrame:
-    """Hybrid zero-Python workhorse: rows that carry parsed lon/lat
-    (~99.7 %) are projected by the Catalyst TM35FIN expression
-    (crs/tm35fin_expr.py — whole-stage codegen, no Python workers);
-    only rows needing the G3 footprint-centroid fallback go through
-    the numpy UDF. Same columns as pages_to_points; e/n may differ
-    from the numpy kernel by O(1e-9 m) on the JVM-projected rows
-    (java.lang.Math vs libm transcendentals), which cannot move any
-    km-grid cell id (boundary-clearance asserted in test_crs_expr.py).
-
-    At 100 TB this is the preferred core: the scan -> extract ->
-    project -> tile prefix is one codegen stage; the Python worker
-    pool only ever sees the rare footprint-only rows."""
-    from fgcspark.crs.tm35fin_expr import tm35_cols
-
-    df = with_extracted(load_pages(spark, data_dir))
-    has_coords = F.col("lon").isNotNull() & F.col("lat").isNotNull()
-    jvm = (
-        df.where(has_coords)
-        .withColumn("_en", tm35_cols(F.col("lon"), F.col("lat")))
-        .withColumn("plon", F.col("lon"))
-        .withColumn("plat", F.col("lat"))
-        .withColumn("e", F.col("_en.e"))
-        .withColumn("n", F.col("_en.n"))
-        .drop("_en")
-    )
-    p = point_en(F.col("lon"), F.col("lat"), F.col("footprint"))
-    py = (
-        df.where(~has_coords)
-        .withColumn("_p", p)
-        .withColumn("plon", F.col("_p.plon"))
-        .withColumn("plat", F.col("_p.plat"))
-        .withColumn("e", F.col("_p.e"))
-        .withColumn("n", F.col("_p.n"))
-        .drop("_p")
-    )
-    return with_tiles(jvm.unionByName(py))
+    return with_tiles(with_point_en(with_extracted(load_pages(spark, data_dir))))
 
 
 def count_substitution_rows(df: DataFrame) -> int:
@@ -324,11 +263,11 @@ def geo_transform(df: DataFrame, geo: str = "point", crs: str = "wgs84") -> Data
     archive path (occurrence rows, the reference's native input)."""
     assert geo in GEO_MODES and crs in CRS_MODES
     if geo == "point":
-        df = with_point(df)
         if crs == "euref":
-            df = with_tm35(df)
+            df = with_point_en(df)
             x, y = F.col("e"), F.col("n")
         else:
+            df = with_point(df)
             x, y = F.col("plon"), F.col("plat")
         wkt = F.when(
             F.col("plon").isNotNull(),

@@ -47,17 +47,9 @@ def pages_stream_to_points(stream: DataFrame) -> DataFrame:
     applied to a streaming DataFrame (identical column logic)."""
     from fgcspark.cells import grid
     from fgcspark.extract import with_extracted
-    from fgcspark.pipeline import point_en
+    from fgcspark.pipeline import with_point_en
 
-    df = with_extracted(stream)
-    need_fp = F.col("lon").isNull() | F.col("lat").isNull()
-    p = point_en(F.col("lon"), F.col("lat"), F.when(need_fp, F.col("footprint")))
-    df = df.withColumn("_p", p).select(
-        "url",
-        "warc_ts",
-        F.col("_p.e").alias("e"),
-        F.col("_p.n").alias("n"),
-    )
+    df = with_point_en(with_extracted(stream)).select("url", "warc_ts", "e", "n")
     return df.withColumn("cell_10km", grid.cell_id(F.col("e"), F.col("n"), 10))
 
 

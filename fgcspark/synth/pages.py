@@ -18,7 +18,7 @@ Independence notes:
   from 1 km tile boundaries so float noise (html carries %.7f ~ 1 cm)
   cannot flip a golden.
 
-Outputs under /root/repo/data/{scale}/:
+Outputs under data/{scale}/ at the checkout root ($FGC_DATA_DIR overrides):
   pages.parquet      url, warc_ts, html(binary), text, lang
   media.parquet      url, media(binary) — real PNG/GIF/JPEG headers
   truth.parquet      per-url expected extraction/point/tile values
@@ -48,7 +48,9 @@ SCALE_ROWS = {
     "sf4": 4000000,
     "sf16": 16000000,
 }
-DATA_DIR = Path(os.environ.get("FGC_DATA_DIR", "/root/repo/data"))
+DATA_DIR = Path(
+    os.environ.get("FGC_DATA_DIR", Path(__file__).resolve().parents[2] / "data")
+)
 
 # Finland-ish working window in EPSG:3067 (1 km inset from round numbers)
 E_MIN, E_MAX = 100500.0, 729500.0

@@ -108,7 +108,7 @@ def run_level(cores: int, sf_dir: str, trials: int, repeat: int = 1) -> dict:
 def run_rung(
     lo: int, hi: int, scale: str, trials: int, rounds: int, repeat: int = 1
 ) -> dict:
-    sf_dir = f"/root/repo/data/{scale}"
+    sf_dir = str(REPO / "data" / scale)
     load0 = os.getloadavg()[0]
     ceiling = cpu_ceiling(lo, hi)
     best: dict[int, float | None] = {lo: None, hi: None}

@@ -70,3 +70,17 @@ def test_finland_envelope_plausible():
     )
     assert ((e > 40000) & (e < 800000)).all()
     assert ((n > 6500000) & (n < 7900000)).all()
+
+
+def test_generated_points_clear_of_km_boundaries(pages_dir):
+    """Guard for the km-grid tiling: every dataset point is > 1e-6 m
+    from every 1 km grid line, so a sub-micrometer projection difference
+    (another libm, another kernel) can never flip any 1/10/50/100 km
+    cell id the tile goldens pin."""
+    import pandas as pd
+
+    truth = pd.read_parquet(f"{pages_dir}/truth.parquet")
+    for col in ("e", "n"):
+        frac = np.abs(truth[col].to_numpy()) % 1000.0
+        dist = np.minimum(frac, 1000.0 - frac)
+        assert dist.min() > 1e-6

@@ -84,3 +84,13 @@ def test_dbscan_border_ambiguity_is_min(spark):
     assert out["0:0"]["cluster"] == 0
     assert out["2:2"]["cluster"] == (2 << 20) + 2
     assert out["1:1"]["role"] == "border" and out["1:1"]["cluster"] == 0
+
+
+def test_dbscan_min_frac_tie_rounds_half_up(spark):
+    # N = 1500 docs, min_frac = 0.003: the threshold is exactly 4.5 and
+    # must round half up to 5 (SQL round), not half-to-even to 4 — so
+    # the isolated 4-doc cell is noise, not a core cell of its own
+    pts = _pages(spark, {(0, 0): 1496, (9, 9): 4})
+    assert 0.003 * 1500 == 4.5
+    rows = dbscan_cells(pts, size_km=10, min_pts=None, min_frac=0.003).collect()
+    assert [(r["cell"], r["role"]) for r in rows] == [("0:0", "core")]

@@ -46,6 +46,19 @@ def test_points_euref_roundtrip(spark, pages_dir, truth):
     assert (got["n"] - truth["n"]).abs().max() < 1e-3
 
 
+def test_points_euref_wkt(spark, pages_dir, truth):
+    # euref point mode: POINT (E N) from the same fused kernel as
+    # pages_to_points, within 1 mm of the truth; no-coordinate rows stay
+    # POINT EMPTY exactly as in wgs84 mode
+    got = _collect(geo_pipeline(spark, pages_dir, geo="point", crs="euref"), "geo_wkt")
+    wgs = _collect(geo_pipeline(spark, pages_dir, geo="point", crs="wgs84"), "geo_wkt")
+    empty = got["geo_wkt"] == "POINT EMPTY"
+    assert (empty == (wgs["geo_wkt"] == "POINT EMPTY")).all()
+    en = got.loc[~empty, "geo_wkt"].str.extract(r"^POINT \((\S+) (\S+)\)$").astype(float)
+    assert (en[0] - truth.loc[en.index, "e"]).abs().max() < 1e-3
+    assert (en[1] - truth.loc[en.index, "n"]).abs().max() < 1e-3
+
+
 def test_tiles_all_sizes(spark, pages_dir, truth):
     got = _collect(
         pages_to_points(spark, pages_dir),

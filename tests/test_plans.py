@@ -32,10 +32,16 @@ def test_single_udf_stage_in_point_path(pts):
     """pages_to_points must run exactly ONE ArrowEvalPython node — the
     fused point+project kernel. Catalyst re-expansion of the struct into
     per-column UDF copies is the regression this guards against."""
-    plan = plan_of(pts.select("url", "e", "n", "cell_10km"))
+    df = pts.select("url", "e", "n", "cell_10km")
+    plan = plan_of(df)
     # formatted mode prints each node once in the tree and once in the
     # detail section — count physical nodes by their "(id) Name" lines
     assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1
+    # one spatial core: pages.parquet is scanned and extracted once (a
+    # union of projection twins scans it twice and repeats the extract)
+    simple = plan_of(df, "simple")
+    assert simple.count("FileScan parquet") == 1, simple
+    assert simple.count("regexp_extract(") <= 6, simple
 
 
 def test_column_pruning_reaches_scan(pts):
@@ -135,13 +141,15 @@ def test_knn_single_materialization(spark, pts, pages_dir):
 
 
 def test_bbox_pipeline_single_udf_stage(spark, pages_dir):
-    """bbox mode must run ONE ArrowEvalPython stage (fused footprint +
-    bbox kernels), not a chain of two Python runners."""
+    """bbox mode (fused footprint + bbox kernels) and euref point mode
+    (the fused point + projection kernel of pages_to_points) must each
+    run ONE ArrowEvalPython stage, not a chain of two Python runners."""
     from fgcspark.pipeline import geo_pipeline
 
-    df = geo_pipeline(spark, pages_dir, geo="bbox", crs="wgs84").select("url", "geo_wkt")
-    plan = plan_of(df)
-    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1
+    for geo, crs in (("bbox", "wgs84"), ("point", "euref")):
+        df = geo_pipeline(spark, pages_dir, geo=geo, crs=crs).select("url", "geo_wkt")
+        plan = plan_of(df)
+        assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1, (geo, crs)
 
 
 def test_fp_partitioned_is_cogroup_no_broadcast_layer(spark, pages_dir):
