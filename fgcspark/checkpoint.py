@@ -10,8 +10,13 @@ Spark's execution model (SURVEY.md §3.2 mapping):
   reference's `skip/n` row windows — stable across runs and cluster
   sizes, so a resume sees the same chunk membership;
 - chunk append-merge (`ogr2ogr -update -append`, api.R:164-185) is
-  replaced by an idempotent dynamic-partition overwrite of
-  `chunk=<i>/` dirs — atomic per chunk, no merge subprocess;
+  replaced by an idempotent overwrite of `_chunk=<i>/` dirs — atomic
+  per chunk, no merge subprocess. Each task writes its rows with
+  pyarrow into a staging dir, one file per (task, chunk); the driver
+  then swaps each pending chunk's staged dir in by rename. Spark's own
+  writer goes through Hadoop's local filesystem, which without the
+  native library forks a `chmod` from the driver JVM for every file
+  and directory it creates (~30 per run of 8 chunks);
 - progress file (api.R:153-157) becomes a manifest dir with one JSON
   per completed chunk carrying lineage (chunk id, predicate) +
   metrics (row count, wall seconds) — the north_rule's
@@ -28,7 +33,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
+import uuid
 from pathlib import Path
 from typing import Callable
 
@@ -49,7 +56,7 @@ class ChunkedRunner:
     """Run a DataFrame pipeline in resumable chunks.
 
     out_dir layout:
-      chunk=<i>/*.parquet   output rows of chunk i (partitioned write)
+      data/_chunk=<i>/*.parquet  output rows of chunk i (one file per task)
       _manifest/chunk-<i>.json  lineage + metrics, written AFTER the
                                 chunk's data is durably on disk
     """
@@ -92,6 +99,78 @@ class ChunkedRunner:
 
     # -- execution ----------------------------------------------------------
 
+    def _write(self, df: DataFrame, pending: list[int]) -> dict[int, int]:
+        """Write df's rows under data/_chunk=<i>/ for every pending i,
+        replacing what was there; returns {chunk: rows written}.
+
+        Tasks write into a staging dir (ignored by readers: it starts
+        with '.') with file names keyed by partition id, so a retried
+        task overwrites its own files. Nothing is visible until the
+        driver renames each staged chunk dir into place."""
+        data = self.out / "data"
+        stage = data / f".staging-{uuid.uuid4().hex}"
+        stage_dir = str(stage)
+        cols = [c for c in df.columns if c != "_chunk"]
+
+        def write_part(batches):
+            import pyarrow as pa
+            import pyarrow.compute as pc
+            import pyarrow.parquet as pq
+            from pyspark import TaskContext
+
+            pid = TaskContext.get().partitionId()
+            writers, rows = {}, {}
+            try:
+                for b in batches:
+                    chunk = b.column("_chunk")
+                    for i in pc.unique(chunk).to_pylist():
+                        part = b.filter(pc.equal(chunk, i)).select(cols)
+                        if i not in writers:
+                            d = f"{stage_dir}/_chunk={i}"
+                            os.makedirs(d, exist_ok=True)
+                            # min/max of long strings (page html, WKT) cost
+                            # ~5 % of the file and prune nothing
+                            stats = [
+                                f.name
+                                for f in part.schema
+                                if not (pa.types.is_string(f.type) or pa.types.is_binary(f.type))
+                            ]
+                            writers[i] = pq.ParquetWriter(
+                                f"{d}/part-{pid:05d}.parquet",
+                                part.schema,
+                                compression="snappy",
+                                store_schema=False,
+                                write_statistics=stats or False,
+                            )
+                            rows[i] = 0
+                        writers[i].write_batch(part)
+                        rows[i] += part.num_rows
+            finally:
+                for w in writers.values():
+                    w.close()
+            if rows:
+                yield pa.RecordBatch.from_pydict(
+                    {"chunk": list(rows), "rows": list(rows.values())},
+                    schema=pa.schema([("chunk", pa.int32()), ("rows", pa.int64())]),
+                )
+
+        try:
+            counts: dict[int, int] = {}
+            for r in df.mapInArrow(write_part, "chunk int, rows long").collect():
+                counts[r["chunk"]] = counts.get(r["chunk"], 0) + r["rows"]
+            data.mkdir(parents=True, exist_ok=True)
+            for i in pending:
+                dst, src = data / f"_chunk={i}", stage / f"_chunk={i}"
+                if dst.exists():
+                    old = stage / f"old_chunk={i}"
+                    os.replace(dst, old)
+                    shutil.rmtree(old)
+                if src.exists():
+                    os.replace(src, dst)
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+        return counts
+
     def run(
         self,
         build: Callable[[SparkSession], DataFrame],
@@ -120,12 +199,7 @@ class ChunkedRunner:
 
         t0 = time.time()
         try:
-            (
-                df.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_chunk")
-                .parquet(str(self.out / "data"))
-            )
+            counts = self._write(df, pending)
         except Exception as e:  # noqa: BLE001 - recorded then re-raised
             for i in pending:
                 self._record(
@@ -138,15 +212,6 @@ class ChunkedRunner:
             raise FgcError("chunk write failed", "chunk_failed") from e
         wall = time.time() - t0
 
-        # lineage + row-count metrics from what is durably on disk
-        counts = {
-            int(r["_chunk"]): int(r["cnt"])
-            for r in self.spark.read.parquet(str(self.out / "data"))
-            .filter(F.col("_chunk").isin([int(i) for i in pending]))
-            .groupBy("_chunk")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
         for i in pending:
             self._record(
                 {

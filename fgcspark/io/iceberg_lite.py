@@ -14,7 +14,9 @@ the engine needs from Iceberg, in Iceberg's own layout style:
 
 - writes are append-only: a commit writes new data files, then a new
   snapshot listing old + new files, then flips the version hint
-  (atomic rename) — readers of snapshot n never see a torn commit;
+  (atomic rename) — readers of snapshot n never see a torn commit.
+  The snapshot file is created exclusively, so concurrent writers
+  retry on the new head instead of overwriting each other's commit;
 - reads resolve a snapshot (time-travel by number) and hand Spark an
   explicit file list, pruned by predicate against the manifest's
   min/max stats BEFORE the scan — the same file-skipping a real
@@ -32,6 +34,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 import uuid
 from pathlib import Path
 
@@ -39,6 +42,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 _STATS_MAX_LEN = 64
+# how long a committer waits for a concurrent writer to flip the head
+_COMMIT_WAIT_S = 10.0
 
 
 def _file_stats(path: str, stat_cols: list[str]) -> dict:
@@ -145,45 +150,71 @@ class IcebergLiteTable:
 
     def _commit(
         self,
-        files: list[dict],
+        add: list[dict],
         schema_json: dict,
         stat_cols: list[str],
-        prev_id: int | None,
+        replaces: list[dict] | tuple = (),
     ) -> int:
-        """Commit a new snapshot over `files`. Order: snapshot json ->
-        atomic version-hint flip, so readers never see a torn commit."""
+        """Commit a new snapshot = the head's files minus `replaces`
+        plus `add`. Order: snapshot json -> atomic version-hint flip, so
+        readers never see a torn commit.
+
+        The snapshot json is created exclusively, so two writers can
+        never both write snapshot n: the loser re-reads the head once
+        the winner has flipped it and rebuilds its file list from that
+        head (optimistic concurrency, snapshot isolation). A commit
+        whose replaced files are no longer in the head fails instead."""
         self.meta_dir.mkdir(parents=True, exist_ok=True)
-        new_id = (prev_id or 0) + 1
-        snap = {
-            "snapshot_id": new_id,
-            "parent": prev_id,
-            "schema": schema_json,
-            "stat_cols": stat_cols,
-            "files": files,
-        }
-        (self.meta_dir / f"snap-{new_id}.json").write_text(json.dumps(snap, indent=1))
-        tmp = self.meta_dir / "version-hint.tmp"
-        tmp.write_text(str(new_id))
-        os.replace(tmp, self.meta_dir / "version-hint.text")  # the commit point
-        return new_id
+        gone = {f["path"] for f in replaces}
+        while True:
+            head_id = self.current_snapshot_id()
+            head = self.snapshot(head_id)["files"] if head_id is not None else []
+            if gone - {f["path"] for f in head}:
+                raise RuntimeError("a concurrent commit replaced files this commit rewrites")
+            new_id = (head_id or 0) + 1
+            snap = {
+                "snapshot_id": new_id,
+                "parent": head_id,
+                "schema": schema_json,
+                "stat_cols": stat_cols,
+                "files": [f for f in head if f["path"] not in gone] + add,
+            }
+            try:
+                with open(self.meta_dir / f"snap-{new_id}.json", "x") as out:
+                    out.write(json.dumps(snap, indent=1))
+            except FileExistsError:
+                self._await_head_past(head_id, new_id)
+                continue
+            tmp = self.meta_dir / f"version-hint-{uuid.uuid4().hex}.tmp"
+            tmp.write_text(str(new_id))
+            os.replace(tmp, self.meta_dir / "version-hint.text")  # the commit point
+            return new_id
+
+    def _await_head_past(self, head_id: int | None, taken: int) -> None:
+        """Wait for the writer that took snapshot `taken` to flip the
+        head. A head that never moves means that writer died between
+        the two steps, leaving an orphan json no reader can see."""
+        deadline = time.monotonic() + _COMMIT_WAIT_S
+        while self.current_snapshot_id() == head_id:
+            if time.monotonic() > deadline:
+                raise RuntimeError(
+                    f"snap-{taken}.json in {self.meta_dir} was never committed; "
+                    "remove it to unblock commits"
+                )
+            time.sleep(0.01)
 
     def append(self, df: DataFrame, stat_cols: list[str] | None = None) -> int:
         """Append df as new data files + a new snapshot; returns the new
         snapshot id. Commit order: data files -> snapshot json -> atomic
         version-hint flip, so concurrent readers always see a complete
-        snapshot."""
+        snapshot, and concurrent appends all survive (see _commit)."""
         prev_id = self.current_snapshot_id()
         prev = self.snapshot(prev_id) if prev_id is not None else None
         if prev is not None and prev["schema"] != df.schema.jsonValue():
             raise ValueError("schema mismatch vs table snapshot")
         stat_cols = stat_cols or (prev["stat_cols"] if prev else df.columns[:1])
         new_files = self._stage_write(df, stat_cols)
-        return self._commit(
-            (prev["files"] if prev else []) + new_files,
-            df.schema.jsonValue(),
-            stat_cols,
-            prev_id,
-        )
+        return self._commit(new_files, df.schema.jsonValue(), stat_cols)
 
     def merge_upsert(
         self, spark: SparkSession, updates: DataFrame, key_col: str
@@ -216,15 +247,17 @@ class IcebergLiteTable:
             return prev_id
         assert n == nd, f"updates must be key-unique on {key_col}: {n} rows, {nd} keys"
 
-        carried, cands = [], []
+        cands = []
         for f in prev["files"]:
             fmin, fmax = f["min"].get(key_col), f["max"].get(key_col)
             disjoint = (fmin is not None and fmin > khi) or (
                 fmax is not None and fmax < klo
             )
-            (carried if disjoint else cands).append(f)
+            if not disjoint:
+                cands.append(f)
 
         new_data = updates
+        rewritten: list[dict] = []
         if cands:
             base = spark.read.parquet(
                 *[str(self.root / f["path"]) for f in cands]
@@ -237,24 +270,15 @@ class IcebergLiteTable:
                 .distinct()
                 .collect()  # bounded by file count, never by rows
             }
-            carried += [
-                f for f in cands if os.path.basename(f["path"]) not in touched
-            ]
-            if touched:
-                touched_paths = [
-                    str(self.root / f["path"])
-                    for f in cands
-                    if os.path.basename(f["path"]) in touched
-                ]
+            rewritten = [f for f in cands if os.path.basename(f["path"]) in touched]
+            if rewritten:
                 survivors = (
-                    spark.read.parquet(*touched_paths)
+                    spark.read.parquet(*[str(self.root / f["path"]) for f in rewritten])
                     .join(keys, key_col, "left_anti")
                 )
                 new_data = survivors.unionByName(updates)
         new_files = self._stage_write(new_data, stat_cols)
-        return self._commit(
-            carried + new_files, prev["schema"], stat_cols, prev_id
-        )
+        return self._commit(new_files, prev["schema"], stat_cols, replaces=rewritten)
 
     def compact(
         self, spark: SparkSession, target_bytes: int = 128 << 20
@@ -266,10 +290,11 @@ class IcebergLiteTable:
         fewer than two small files exist."""
         prev_id = self.current_snapshot_id()
         prev = self.snapshot(prev_id)
-        smalls, bigs = [], []
+        smalls = []
         for f in prev["files"]:
             size = os.path.getsize(self.root / f["path"])
-            (smalls if size < target_bytes else bigs).append((f, size))
+            if size < target_bytes:
+                smalls.append((f, size))
         if len(smalls) < 2:
             return prev_id
         total = sum(sz for _, sz in smalls)
@@ -278,7 +303,7 @@ class IcebergLiteTable:
         new_files = self._stage_write(df.repartition(nparts), prev["stat_cols"])
         assert sum(f["rows"] for f in new_files) == sum(f[0]["rows"] for f in smalls)
         return self._commit(
-            [f for f, _ in bigs] + new_files, prev["schema"], prev["stat_cols"], prev_id
+            new_files, prev["schema"], prev["stat_cols"], replaces=[f for f, _ in smalls]
         )
 
     def expire_snapshots(self, keep_last: int = 1) -> list[str]:

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fgcspark.crs import tm35fin as tm
+from fgcspark.session import local_frame
 
 _MAX_PROBES = 100_000  # probes are driver-resident by contract (cf. joins/knn.py)
 
@@ -92,9 +93,7 @@ def dwithin_join_partitioned(
     from fgcspark.joins.knn import _probe_en
 
     s = float(cell_km * 1000)
-    offs = spark.createDataFrame(
-        _cover_offsets(float(radius_m), s), schema="dn long, de long"
-    )
+    offs = local_frame(spark, _cover_offsets(float(radius_m), s), "dn long, de long")
     pr = probes.select("probe_id", _probe_en("lon", "lat").alias("_p")).select(
         "probe_id",
         F.col("_p.e").alias("pe"),
@@ -152,8 +151,8 @@ def dwithin_join(
         for i in range(len(pid))
         for cn, ce in _cover_cells(float(pe[i]), float(pn[i]), float(radius_m), s)
     ]
-    cdf = spark.createDataFrame(
-        cover, schema="probe_id long, pe double, pn double, cell_n long, cell_e long"
+    cdf = local_frame(
+        spark, cover, "probe_id long, pe double, pn double, cell_n long, cell_e long"
     )
     pts = points.select(
         key_col,

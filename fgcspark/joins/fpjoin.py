@@ -30,7 +30,12 @@ Physical plan (Spark-first, zero probe-side shuffle):
 2. the probe's bbox cell cover is exploded JVM-side with
    sequence()/explode (pure codegen — footprints are small, the cover
    is a handful of cells at the prefilter grid);
-3. broadcast hash join against the layer's (cell, poly_id) cover;
+3. the layer ships to the JVM as ONE Arrow row per polygon (edge and
+   vertex arrays + bbox); its (cell, poly_id, bbox) cover is exploded
+   in the JVM from the bbox columns alone, and the probe joins it with
+   a broadcast hash join. The polygon's edge/vertex arrays are joined
+   by poly_id only after the reporting-cell and bbox filters, so they
+   are broadcast once per polygon, not once per covered cell;
 4. the exact intersects refine: nested JVM higher-order lambdas over
    the part/edge arrays (no Python after stage 1). Duplicate (footprint,
    polygon) candidates from multi-cell overlap are deduped WITHOUT a
@@ -58,7 +63,8 @@ from pyspark.sql.functions import pandas_udf
 from fgcspark.crs import tm35fin as tm
 from fgcspark.geom.wkb import from_wkb, to_wkb
 from fgcspark.geom.wkt import _KNOWN, Geom, parse_wkt
-from fgcspark.joins.pip import DEFAULT_CELL_KM, build_polygon_index, _pip_mask
+from fgcspark.joins.pip import _pip_mask, bbox_cells, build_polygon_index
+from fgcspark.session import local_frame
 
 
 def _project_geom(g: Geom) -> Geom:
@@ -405,6 +411,17 @@ def _fp_project_wkb(fp: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.DataFra
     )
 
 
+# Marked nondeterministic on purpose (they are in fact deterministic),
+# for the same reason as pipeline.point_en: it stops Catalyst pushing
+# the `isNotNull` filter on the parsed geometry below the projection,
+# which plans the ArrowEvalPython parse TWICE (observed 2 UDF nodes and
+# ~1 s extra per footprint join at sf0.01 on local[4]). The trade (no
+# filter pushdown through the UDF stage) is free: the join filters
+# only after the geometry is materialized anyway.
+_fp_project_parts = _fp_project_parts.asNondeterministic()
+_fp_project_wkb = _fp_project_wkb.asNondeterministic()
+
+
 def footprint_join(
     spark: SparkSession,
     pages: DataFrame,
@@ -431,38 +448,35 @@ def footprint_join(
     the two joins return identical rows (asserted by test_joins.py)."""
     idx = build_polygon_index(spark, polygons, cell_km)
     s = cell_km * 1000
-    verts = {
-        int(pid): [(float(x), float(y)) for ring in idx.rings[i] for x, y in ring]
-        for i, pid in enumerate(idx.poly_ids)
-    }
-    cover_rows = [
-        (nb, eb, pid, edges, verts[pid], *bbox)
-        for nb, eb, pid, edges, *bbox in idx.cover_with_edges()
-    ]
-    cover = spark.createDataFrame(
-        cover_rows,
-        schema=(
-            "cell_n long, cell_e long, poly_id long, "
-            "poly_edges array<struct<x1:double,y1:double,x2:double,y2:double>>, "
-            "poly_verts array<struct<x:double,y:double>>, "
-            "bx0 double, by0 double, bx1 double, by1 double"
-        ),
+    shapes = local_frame(
+        spark,
+        [
+            (
+                int(pid),
+                idx.edges_flat(i),
+                [(x, y) for ring in idx.rings[i] for x, y in ring.tolist()],
+                *map(float, bbox),
+            )
+            for i, (pid, bbox) in enumerate(zip(idx.poly_ids, idx.bboxes))
+        ],
+        "poly_id long, "
+        "poly_edges array<struct<x1:double,y1:double,x2:double,y2:double>>, "
+        "poly_verts array<struct<x:double,y:double>>, "
+        "bx0 double, by0 double, bx1 double, by1 double",
+    )
+    cover = bbox_cells(
+        shapes.select("poly_id", "bx0", "by0", "bx1", "by1"), s, "bx0", "by0", "bx1", "by1"
     )
 
     probe = (
-        pages.select(
-            key_col,
-            _fp_project_parts(F.col(fp_col), F.col(lon_col), F.col(lat_col)).alias("_g"),
-        )
-        .select(key_col, "_g.*")
-        .where(F.col("parts").isNotNull())
-        .withColumn(
-            "cell_n",
-            F.explode(F.sequence(F.floor(F.col("y0") / s), F.floor(F.col("y1") / s))),
-        )
-        .withColumn(
-            "cell_e",
-            F.explode(F.sequence(F.floor(F.col("x0") / s), F.floor(F.col("x1") / s))),
+        bbox_cells(
+            pages.select(
+                key_col,
+                _fp_project_parts(F.col(fp_col), F.col(lon_col), F.col(lat_col)).alias("_g"),
+            )
+            .select(key_col, "_g.*")
+            .where(F.col("parts").isNotNull()),
+            s, "x0", "y0", "x1", "y1",
         )
         .join(F.broadcast(cover), ["cell_n", "cell_e"])
         # reporting-cell dedup (same arithmetic as the partitioned refine):
@@ -478,6 +492,8 @@ def footprint_join(
             (F.col("x0") <= F.col("bx1")) & (F.col("x1") >= F.col("bx0"))
             & (F.col("y0") <= F.col("by1")) & (F.col("y1") >= F.col("by0"))
         )
+        # the polygon's shapes join only the surviving candidates
+        .join(F.broadcast(shapes.select("poly_id", "poly_edges", "poly_verts")), "poly_id")
     )
 
     hit = F.exists(
@@ -535,21 +551,14 @@ def footprint_join_partitioned(
 
     s = cell_km * 1000
     cover = polygon_cover_table(polygons, cell_km)
-    probe = (
+    probe = bbox_cells(
         pages.select(
             key_col,
             _fp_project_wkb(F.col(fp_col), F.col(lon_col), F.col(lat_col)).alias("_g"),
         )
         .select(key_col, "_g.*")
-        .where(F.col("wkb").isNotNull())
-        .withColumn(
-            "cell_n",
-            F.explode(F.sequence(F.floor(F.col("y0") / s), F.floor(F.col("y1") / s))),
-        )
-        .withColumn(
-            "cell_e",
-            F.explode(F.sequence(F.floor(F.col("x0") / s), F.floor(F.col("x1") / s))),
-        )
+        .where(F.col("wkb").isNotNull()),
+        s, "x0", "y0", "x1", "y1",
     )
     # persist: the hot-cell factor aggregate and the cogroup both read
     # the parsed projection — without the cache the parse UDF runs twice

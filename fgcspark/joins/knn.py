@@ -35,7 +35,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.storagelevel import StorageLevel
 
 from fgcspark.crs import tm35fin as tm
-
+from fgcspark.session import local_frame
 
 from pyspark.sql import types as T
 
@@ -139,9 +139,7 @@ def knn_join_partitioned(
     try:
         while r_lo <= max_rings:
             r_cap = min(r_hi, max_rings)
-            offs = spark.createDataFrame(
-                _ring_offsets(r_lo, r_cap), schema="dn long, de long"
-            )
+            offs = local_frame(spark, _ring_offsets(r_lo, r_cap), "dn long, de long")
             cells = active.crossJoin(F.broadcast(offs)).select(
                 "probe_id",
                 "pe",
@@ -268,9 +266,8 @@ def knn_join(
                 cn, ce = pcell[i]
                 for c in _ring_cells(int(cn), int(ce), r_lo, min(r_hi, max_rings)):
                     cells.append((int(pid[i]), float(pe[i]), float(pn[i]), c[0], c[1]))
-            cdf = spark.createDataFrame(
-                cells,
-                schema="probe_id long, pe double, pn double, cell_n long, cell_e long",
+            cdf = local_frame(
+                spark, cells, "probe_id long, pe double, pn double, cell_n long, cell_e long"
             )
             cand = pts.join(F.broadcast(cdf), ["cell_n", "cell_e"]).select(
                 "probe_id",

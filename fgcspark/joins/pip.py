@@ -6,11 +6,14 @@ R/finbif_geo_convert.R:83); this operator is the graft requirement
 EPSG:3067) against a small polygon layer.
 
 Physical strategy (SURVEY.md §4 rewrite #1):
-1. driver-side: parse + project the polygon layer once and build the
-   cell cover of each polygon's bbox at a prefilter grid size, each
-   cover row carrying the polygon's flat edge array and bbox;
-2. candidates = pages equi-joined (broadcast hash join, zero shuffle)
-   to that (cell_key, poly_id) cover table on the page's cell key;
+1. driver-side: parse + project the polygon layer once into ONE row
+   per polygon (its flat edge array + bbox), shipped to the JVM as an
+   Arrow table — no pickled rows, no Python stage in any job that
+   reads it;
+2. the JVM explodes each polygon row over the prefilter cells of its
+   bbox (sequence/explode with the probe side's own floor arithmetic)
+   and candidates = pages equi-joined (broadcast hash join, zero
+   shuffle) to that (cell_key, poly_id) cover on the page's cell key;
 3. exact crossing-number refine as a JVM higher-order lambda over the
    candidate's edge array — no Python workers in the join.
 
@@ -32,13 +35,14 @@ from pyspark.sql import types as T
 
 from fgcspark.crs import tm35fin as tm
 from fgcspark.geom.wkt import parse_wkt
+from fgcspark.session import local_frame
 
 DEFAULT_CELL_KM = 50
 
 
 class PolygonIndex:
-    """Driver-built polygon index: projected rings + bboxes + the cell
-    cover table that pip_join broadcasts.
+    """Driver-built polygon index: projected rings + bboxes, from which
+    pip_join's per-polygon build table is shipped.
 
     `rings[i]` is the LIST of rings of polygon i — exterior ring(s)
     plus interior holes; MULTIPOLYGON parts contribute their rings to
@@ -72,25 +76,7 @@ class PolygonIndex:
             closed = bool((ring[0] == ring[-1]).all())
             a = ring[:-1] if closed else ring
             b = ring[1:] if closed else np.roll(ring, -1, axis=0)
-            for (ex0, ey0), (ex1, ey1) in zip(a, b):
-                out.append((float(ex0), float(ey0), float(ex1), float(ey1)))
-        return out
-
-    def cover_with_edges(self):
-        """(cell_n, cell_e, poly_id, edges, x0, y0, x1, y1) rows: one
-        per prefilter cell covering each polygon bbox, with the
-        polygon's flat edge array and bbox — pip_join's broadcast
-        build side."""
-        s = self.cell_km * 1000
-        out = []
-        for i, (pid, (x0, y0, x1, y1)) in enumerate(zip(self.poly_ids, self.bboxes)):
-            edges = self.edges_flat(i)
-            for nb in range(int(np.floor(y0 / s)), int(np.floor(y1 / s)) + 1):
-                for eb in range(int(np.floor(x0 / s)), int(np.floor(x1 / s)) + 1):
-                    out.append(
-                        (nb, eb, int(pid), edges,
-                         float(x0), float(y0), float(x1), float(y1))
-                    )
+            out.extend(map(tuple, np.hstack([a, b]).tolist()))
         return out
 
 
@@ -175,16 +161,33 @@ def cached_index(
     return _INDEX_CACHE[k]
 
 
+def bbox_cells(df: DataFrame, s: float, x0: str, y0: str, x1: str, y1: str) -> DataFrame:
+    """One row per (row, prefilter cell of size s covering its bbox):
+    cell_n/cell_e exploded in the JVM with the same floor arithmetic
+    as _point_cells, so a cover and a probe agree on every cell."""
+    return df.withColumn(
+        "cell_n", F.explode(F.sequence(F.floor(F.col(y0) / s), F.floor(F.col(y1) / s)))
+    ).withColumn(
+        "cell_e", F.explode(F.sequence(F.floor(F.col(x0) / s), F.floor(F.col(x1) / s)))
+    )
+
+
 def _expr_cover(spark: SparkSession, idx) -> DataFrame:
-    """The broadcast build side of pip_join: one row per (covering
-    cell, polygon) carrying the polygon's edge array + bbox."""
-    return spark.createDataFrame(
-        idx.cover_with_edges(),
-        schema=(
-            "cell_n long, cell_e long, poly_id long, "
-            "edges array<struct<x0:double,y0:double,x1:double,y1:double>>, "
-            "bx0 double, by0 double, bx1 double, by1 double"
-        ),
+    """The broadcast build side of pip_join: one Arrow row per polygon
+    (edge array + bbox), exploded in the JVM to one row per (covering
+    cell, polygon)."""
+    polys = local_frame(
+        spark,
+        [
+            (int(pid), idx.edges_flat(i), *map(float, bbox))
+            for i, (pid, bbox) in enumerate(zip(idx.poly_ids, idx.bboxes))
+        ],
+        "poly_id long, "
+        "edges array<struct<x0:double,y0:double,x1:double,y1:double>>, "
+        "bx0 double, by0 double, bx1 double, by1 double",
+    )
+    return bbox_cells(polys, idx.cell_km * 1000, "bx0", "by0", "bx1", "by1").select(
+        "cell_n", "cell_e", "poly_id", "edges", "bx0", "by0", "bx1", "by1"
     )
 
 
@@ -387,7 +390,7 @@ def hot_cell_factors(
         (int(r["cell_n"]), int(r["cell_e"]), int(math.ceil(r["n_pts"] / max_cell_points)))
         for r in hot
     ]
-    return spark.createDataFrame(rows, schema="cell_n long, cell_e long, m int")
+    return local_frame(spark, rows, "cell_n long, cell_e long, m int")
 
 
 def pip_join_partitioned(

@@ -10,7 +10,52 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+# cap on the host-derived driver heap
+_MAX_DRIVER_MEM_MB = 48 * 1024
+
+
+def default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
+    """Half of the host's MemTotal, capped at 48g — local mode runs the
+    whole engine inside the driver JVM, so its heap must fit the box.
+    Falls back to Spark's own 1g where MemTotal cannot be read."""
+    try:
+        with open(meminfo) as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "1g"
+    return f"{max(1024, min(_MAX_DRIVER_MEM_MB, kb // 2048))}m"
+
+
+def default_parallelism() -> int:
+    """$SPARK_GRAFT_CPUS when set, else the CPUs this process may use."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # pragma: no cover - non-Linux
+        return os.cpu_count() or 1
+
+
+def local_frame(spark: SparkSession, rows, ddl_schema: str) -> DataFrame:
+    """A driver-built table (list of tuples) as a DataFrame shipped to
+    the JVM as Arrow record batches. The list form of createDataFrame
+    pickles the rows into a Python RDD, so every job that reads the
+    table (e.g. to broadcast it) first runs a stage of Python workers
+    that only unpickle rows; the Arrow form is a plain JVM scan."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(ddl_schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [[] for _ in arrow]
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema=schema)
 
 
 def get_spark(
@@ -22,6 +67,9 @@ def get_spark(
     """Build (or reuse) a SparkSession tuned for this engine.
 
     cores: parallelism for local mode (defaults to $SPARK_GRAFT_CPUS or '*').
+    Shuffle partitions default to default_parallelism() and the driver
+    heap to $FGC_DRIVER_MEM or default_driver_mem(), so the defaults
+    follow the host.
     On a real cluster this builder is a no-op passthrough: master comes
     from spark-submit and the sql confs still apply.
     """
@@ -38,7 +86,7 @@ def get_spark(
     else:
         master = f"local[{cores}]"
     is_local = master.startswith("local")
-    n_shuffle = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    n_shuffle = shuffle_partitions or default_parallelism()
 
     builder = (
         SparkSession.builder.master(master)
@@ -58,7 +106,7 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             os.environ.get("FGC_ARROW_BATCH", "65536"),
         )
-        .config("spark.driver.memory", os.environ.get("FGC_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("FGC_DRIVER_MEM") or default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

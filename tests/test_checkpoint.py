@@ -105,3 +105,17 @@ def test_failed_chunk_records_error(spark, pages_dir, tmp_path):
     # and the run is retryable after the failure is fixed
     s = r.run(_build(pages_dir))
     assert s["processed"] == 2 and r.progress_percent() == 100
+
+
+def test_rerun_chunk_replaces_its_rows(spark, pages_dir, tmp_path):
+    # a chunk whose manifest entry is lost is re-processed, and its dir
+    # is replaced, not appended to; no staging dir is left behind
+    r = ChunkedRunner(spark, str(tmp_path / "redo"), n_chunks=4)
+    r.run(_build(pages_dir))
+    (tmp_path / "redo" / "_manifest" / "chunk-1.json").unlink()
+    s = ChunkedRunner(spark, str(tmp_path / "redo"), n_chunks=4).run(_build(pages_dir))
+    assert s["processed"] == 1 and s["skipped"] == 3
+    assert r.read_output().count() == 2000
+    assert sorted(p.name for p in (tmp_path / "redo" / "data").iterdir()) == [
+        f"_chunk={i}" for i in range(4)
+    ]

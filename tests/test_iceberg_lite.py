@@ -7,6 +7,7 @@ This is the documented stand-in for the north_rule's "Iceberg tables"
 from __future__ import annotations
 
 import json
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -201,3 +202,42 @@ def test_expire_snapshots_drops_unreferenced(spark, kv_table):
     assert kv_table.read(spark).count() == 300
     with pytest.raises(FileNotFoundError):
         kv_table.snapshot(ids[0])
+
+
+def test_concurrent_appends_all_survive(spark, tmp_path, monkeypatch):
+    """More writers than cores stage their data files at the same time
+    and then all commit against the same head: every loser of the
+    snapshot-id race must rebuild on the winner's head, not overwrite
+    it."""
+    t = IcebergLiteTable(str(tmp_path / "race_tbl"))
+    t.append(spark.range(0, 10).coalesce(1))
+    starts = [100 * (i + 1) for i in range(6)]
+    barrier = threading.Barrier(len(starts), timeout=120)
+    stage = IcebergLiteTable._stage_write
+
+    def staged_together(self, df, stat_cols):
+        files = stage(self, df, stat_cols)
+        barrier.wait()  # every writer holds staged files, same head
+        return files
+
+    monkeypatch.setattr(IcebergLiteTable, "_stage_write", staged_together)
+    ids, errors = [], []
+
+    def write(lo):
+        try:
+            ids.append(t.append(spark.range(lo, lo + 10).coalesce(1)))
+        except Exception as e:  # pragma: no cover - surfaced below
+            errors.append(e)
+
+    threads = [threading.Thread(target=write, args=(lo,)) for lo in starts]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=300)
+        assert not th.is_alive()
+    assert not errors, errors
+    n = len(starts) + 1
+    assert sorted(ids) == list(range(2, n + 1)) and t.history() == list(range(1, n + 1))
+    got = sorted(r.id for r in t.read(spark).collect())
+    assert got == sorted(i for lo in [0, *starts] for i in range(lo, lo + 10))
+    assert [t.snapshot(i)["parent"] for i in range(2, n + 1)] == list(range(1, n))

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from fgcspark.joins.knn import knn_join, knn_join_partitioned
-from fgcspark.joins.pip import build_polygon_index, pip_join
+from fgcspark.joins.pip import _expr_cover, build_polygon_index, pip_join
 from fgcspark.pipeline import pages_to_points
 
 
@@ -45,7 +45,10 @@ def test_pip_cell_prefilter_is_lossless(spark, pages_dir, points):
 def test_pip_index_cover_contains_bbox(spark, pages_dir):
     polys = spark.read.parquet(f"{pages_dir}/polygons.parquet")
     idx = build_polygon_index(spark, polys, cell_km=50)
-    cover = {row[:3] for row in idx.cover_with_edges()}
+    cover = {
+        (r["cell_n"], r["cell_e"], r["poly_id"])
+        for r in _expr_cover(spark, idx).collect()
+    }
     s = 50 * 1000
     for pid, (x0, y0, x1, y1) in zip(idx.poly_ids, idx.bboxes):
         for corner in ((x0, y0), (x1, y1)):

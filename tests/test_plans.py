@@ -191,3 +191,45 @@ def test_ring_counts_single_source_scan(spark, pages_dir):
     assert "Scan parquet" not in plan and "FileScan" not in plan
     assert "Scan ExistingRDD" in plan
     assert out.count() > 0
+
+
+def _has_python_rdd(df) -> bool:
+    return "PythonRDD" in df._jdf.queryExecution().toRdd().toDebugString()
+
+
+def test_driver_tables_ship_as_arrow(spark, pages_dir):
+    """Driver-built join tables reach the JVM as Arrow, not as a
+    pickled Python RDD: a job that broadcasts them must not start a
+    Python stage that only unpickles rows."""
+    from fgcspark.joins.pip import _expr_cover, build_polygon_index
+    from fgcspark.session import local_frame
+
+    df = local_frame(
+        spark,
+        [(1, [(0.0, 1.0)], 2.5), (2, [], None)],
+        "id long, pts array<struct<x:double,y:double>>, v double",
+    )
+    assert not _has_python_rdd(df)
+    assert df.collect()[0]["pts"][0]["y"] == 1.0
+    polys = spark.read.parquet(f"{pages_dir}/polygons.parquet")
+    assert not _has_python_rdd(_expr_cover(spark, build_polygon_index(spark, polys)))
+
+
+def test_footprint_joins_parse_once(spark, pages_dir):
+    """Both footprint joins run the parse/project UDF exactly once: a
+    deterministic UDF lets the null filter on its output be planned
+    as a second ArrowEvalPython copy."""
+    from fgcspark.extract import with_extracted
+    from fgcspark.joins.fpjoin import footprint_join, footprint_join_partitioned
+    from fgcspark.pipeline import load_pages
+
+    # no limit(): a filter above a limit cannot be pushed below it,
+    # which would hide the duplication this test guards against
+    pages = with_extracted(load_pages(spark, pages_dir))
+    polys = spark.read.parquet(f"{pages_dir}/polygons.parquet")
+    for df in (
+        footprint_join(spark, pages, polys),
+        footprint_join_partitioned(spark, pages, polys, materialize=False),
+    ):
+        plan = plan_of(df)
+        assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1, plan
